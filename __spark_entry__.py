@@ -79,7 +79,7 @@ def entry(spark: SparkSession) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="silkworm_entry_")
     engine = run_crawl(
         spark, web, seeds, None, ckpt,
-        CrawlConfig(max_rounds=3, round_budget=100_000, use_bloom=True),
+        CrawlConfig(max_rounds=3, round_budget=100_000),
     )
     return engine.documents()
 

@@ -84,11 +84,6 @@ os.makedirs(BENCH_TMP, exist_ok=True)
 # measurement exactly like checkpoint writes would
 os.environ.setdefault("SPARK_LOCAL_DIRS", os.path.join(BENCH_TMP, "local"))
 os.makedirs(os.environ["SPARK_LOCAL_DIRS"], exist_ok=True)
-# 2M-URL rounds cache ~12 GB of uncompressed bodies + span arrays per
-# round (compression deliberately off — see session.py); the default
-# 20g heap OOMed the 16-thread leg. Legs run one at a time, so a big
-# heap costs nothing. Inherited by leg subprocesses via the env.
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
 
 # crawl workload: pre-populated frontier (seeds) over a synthetic web.
 # TWO 1.3x10^6-URL rounds per leg — the amortized-round regime the
@@ -772,6 +767,14 @@ def main() -> None:
 
 
 if __name__ == "__main__":
+    # 2M-URL rounds cache ~12 GB of uncompressed bodies + span arrays per
+    # round (compression deliberately off — see session.py); the default
+    # 20g heap OOMed the 16-thread leg. Legs run one at a time, so a big
+    # heap costs nothing. Set here, not at import: a process that only
+    # imports this module (a test of one of its helpers) must keep the
+    # session's own heap default. Leg and fixture children run this
+    # file as a script, so they set it too.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
     if "--leg" in sys.argv:
         # child mode (run_leg): pin this process — and therefore the
         # JVM + Python workers it spawns — to exactly N cores, run one

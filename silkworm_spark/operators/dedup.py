@@ -87,12 +87,12 @@ def dedup_candidates(
     nf = candidates.filter(~F.col("dont_filter"))
     seen_keys = seen.select("url_hash", "url")
 
-    use_bloom = (
+    probe_bloom = (
         bloom is not None
         and not bloom.is_empty
         and (n_seen is None or n_seen > broadcast_max_rows)
     )
-    if not use_bloom:
+    if not probe_bloom:
         fresh = first_wins_intra_round(
             nf.join(F.broadcast(seen_keys), on=["url_hash", "url"], how="left_anti")
         )

@@ -1,11 +1,13 @@
 """The fetch stage.
 
 Offline mode (tests/bench): a deterministic equi-join of the dequeued
-batch against the synthetic ``web`` table, with the redirect loop of
-the reference fetch (http.py:80-152,427-464) unrolled as a bounded
-chain of joins — follow 301/302/303/307/308 ``Location``, cap at
-``max_redirects`` (http.py:119-122), detect loops via the visited-URL
-set (http.py:128-129), count ``redirect_times`` (http.py:461-463).
+batch against the synthetic ``web`` table. The redirect loop of the
+reference fetch (http.py:80-152,427-464) is resolved once per crawl
+(``resolve_web``) as a bounded chain of joins — follow
+301/302/303/307/308 ``Location``, cap at ``max_redirects``
+(http.py:119-122), detect loops via the visited-URL set
+(http.py:128-129), count ``redirect_times`` (http.py:461-463) — and
+each round is one join against that table (``offline_fetch_resolved``).
 Retryable pages surface their listed status until ``retry_times``
 reaches the fixture's ``attempts_until_ok`` (emulating a server that
 fails k times then succeeds).
@@ -60,82 +62,6 @@ def _with_fetch_url(batch: DataFrame) -> DataFrame:
         "_fetch", merge_params_udf("url", "params")
     )
     return without.unionByName(with_p)
-
-
-def offline_fetch(batch: DataFrame, web: DataFrame, max_redirects: int = 10) -> DataFrame:
-    """Dequeued frontier batch → batch + fetch-result columns.
-
-    Missing URLs (no row in ``web``) become ``error='fetch_error'``
-    with NULL status, matching a network/DNS failure in the reference
-    (http.py raises, engine.py:131-137 counts an error).
-    """
-    w = web.select(
-        F.col("url").alias("w_url"), F.col("status").alias("w_status"),
-        F.col("content_type").alias("w_ct"), F.col("redirect_to").alias("w_redir"),
-        F.col("body").alias("w_body"), F.col("attempts_until_ok").alias("w_attempts"),
-    )
-
-    pending = _with_fetch_url(batch).select(
-        *_CARRY,
-        F.col("_fetch").alias("cur_url"),
-        F.array(F.col("_fetch")).alias("visited"),
-        F.lit(0).alias("redirect_times"),
-    )
-    finished: list[DataFrame] = []
-    cached: list[DataFrame] = []
-
-    for _step in range(max_redirects + 1):
-        j = pending.join(w, pending.cur_url == w.w_url, "left")
-        # a retryable page succeeds once retry_times >= attempts_until_ok
-        eff_status = F.when(F.col("w_url").isNull(), F.lit(None).cast("int")).otherwise(
-            F.when(
-                (F.col("w_attempts") > 0) & (F.col("retry_times") >= F.col("w_attempts")),
-                F.lit(200),
-            ).otherwise(F.col("w_status"))
-        )
-        j = j.withColumn("eff_status", eff_status)
-        is_redirect = (
-            F.col("eff_status").isin(*REDIRECT_STATUSES) & F.col("w_redir").isNotNull()
-        )
-        loops = is_redirect & F.array_contains(F.col("visited"), F.col("w_redir"))
-        over = F.lit(_step >= max_redirects)
-
-        done = j.filter(~is_redirect | loops | over).select(
-            *_CARRY,
-            F.col("cur_url").alias("final_url"),
-            F.col("eff_status").alias("status"),
-            F.col("w_ct").alias("content_type"),
-            F.col("w_body").alias("body"),
-            F.col("redirect_times"),
-            F.when(F.col("w_url").isNull(), F.lit("fetch_error"))
-            .when(loops, F.lit("redirect_loop"))
-            .when(is_redirect & over, F.lit("too_many_redirects"))
-            .otherwise(F.lit(None).cast("string"))
-            .alias("error"),
-            F.lit(None).cast("map<string,string>").alias("resp_headers"),
-        )
-        finished.append(done)
-
-        # cache the (tiny) redirecting tail so each unroll step is one
-        # incremental join, not a re-evaluation of the whole chain
-        pending = j.filter(is_redirect & ~loops & ~over).select(
-            *_CARRY,
-            F.col("w_redir").alias("cur_url"),
-            F.array_append(F.col("visited"), F.col("w_redir")).alias("visited"),
-            (F.col("redirect_times") + 1).alias("redirect_times"),
-        ).cache()
-        cached.append(pending)
-        if pending.isEmpty():
-            break
-
-    out = finished[0]
-    for d in finished[1:]:
-        out = out.unionByName(d)
-    out = out.cache()
-    out.count()  # materialize before releasing the unroll tails
-    for c in cached:
-        c.unpersist()
-    return out
 
 
 RESOLVED_COLS = [
@@ -441,8 +367,8 @@ def live_fetch(
     global rate stays budget-bounded.
 
     Redirects are driven MANUALLY (the opener's redirect handler is
-    disabled) so count/cap/loop semantics match ``offline_fetch``
-    exactly (reference http.py:80-152,427-464): follow
+    disabled) so count/cap/loop semantics match ``resolve_web`` /
+    ``offline_fetch_resolved`` exactly (reference http.py:80-152,427-464): follow
     301/302/303/307/308 ``Location``, count ``redirect_times``, detect
     loops via the visited set (error ``redirect_loop``), stop at
     ``max_redirects`` (error ``too_many_redirects``); 301/302/303

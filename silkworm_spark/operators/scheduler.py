@@ -74,6 +74,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _INF = (1 << 31) - 1
+# salt granularity: a host gets one salt per this many batch rows
+_ROWS_PER_SALT = 1000
 
 
 @dataclass
@@ -86,11 +88,11 @@ class DequeueResult:
     n_denied: int = 0
     seq_bounds: tuple | None = None  # (min seq, max seq) of the batch
     floor_next: int = 0  # lower bound on the smallest live seq after this round
-    _scored: DataFrame | None = None  # internal cache handle (unpersist after round)
+    _cache: DataFrame | None = None  # cached plan, freed by release()
 
     def release(self) -> None:
-        if self._scored is not None:
-            self._scored.unpersist()
+        if self._cache is not None:
+            self._cache.unpersist()
 
 
 def _dequeue_fifo(
@@ -102,8 +104,11 @@ def _dequeue_fifo(
     horizon: tuple[int, int, int] | None,
 ) -> DequeueResult:
     """Politeness-free FIFO dequeue: budget-th smallest eligible seq in
-    one narrow job, batch as a lazy filter (no cache, no window). Exact
-    equivalence with the general path is asserted by
+    one narrow job, no window. The batch is a filter over the (merge-
+    on-read) frontier, so it is cached: every consumer (the fetch
+    joins, fetch_log, consumed, host_state) would otherwise re-scan
+    the whole frontier. ``release()`` frees it. Exact equivalence with
+    the general path is asserted by
     tests/test_operators_unit.py::test_dequeue_fifo_fast_path_equals_general."""
     spark = eligible.sparkSession
     floor, seq_next, factor = horizon if horizon else (0, None, 0)
@@ -132,7 +137,7 @@ def _dequeue_fifo(
     # no host-locality requirement without politeness: salt uniformly
     batch = batch.withColumn(
         "part", F.pmod(F.xxhash64("url"), F.lit(1024)).cast("int")
-    )
+    ).select(*keep_cols, "part").cache()
     # floor for the next round's horizon: everything ≤ kth is consumed
     if n_batch and (h_cap is None or n_batch >= round_budget):
         floor_next = int(kth) + 1
@@ -151,7 +156,7 @@ def _dequeue_fifo(
     )
     empty = batch.filter(F.lit(False)).select(*keep_cols)
     return DequeueResult(
-        batch=batch.select(*keep_cols, "part"),
+        batch=batch,
         denied=empty,
         new_host_state=new_host_state,
         host_counts=taken,
@@ -159,7 +164,7 @@ def _dequeue_fifo(
         n_denied=0,
         seq_bounds=(int(st["mn"]), int(kth)) if n_batch else None,
         floor_next=floor_next,
-        _scored=None,
+        _cache=batch,
     )
 
 
@@ -172,7 +177,6 @@ def dequeue_round(
     round_budget: int = 1_000_000,
     per_host_cap: int = _INF,
     num_partitions: int | None = None,
-    target_rows_per_partition: int = 1000,
     horizon: tuple[int, int, int] | None = None,
     no_politeness: bool = False,
     mixed_priority: bool = False,
@@ -349,15 +353,16 @@ def dequeue_round(
     else:
         floor_next = int(seq_max) + 1 if seq_max is not None else int(floor)
 
-    # salted partition key: hot hosts fan out over ceil(rows/target)
-    # salts. `part` is a logical key in a fixed 1024 space — the engine
-    # repartitions on it with a width adapted to the batch size.
+    # salted partition key: hot hosts fan out over
+    # ceil(rows/_ROWS_PER_SALT) salts. `part` is a logical key in a
+    # fixed 1024 space — the engine repartitions on it with a width
+    # adapted to the batch size.
     key_space = 1024
     batch = (
         batch.withColumn(
             "_salts",
             F.greatest(
-                F.ceil(F.col("_host_rows") / F.lit(target_rows_per_partition)), F.lit(1)
+                F.ceil(F.col("_host_rows") / F.lit(_ROWS_PER_SALT)), F.lit(1)
             ),
         )
         .withColumn(
@@ -397,5 +402,5 @@ def dequeue_round(
         n_denied=n_denied,
         seq_bounds=(int(seq_min), int(seq_max)) if n_batch else None,
         floor_next=floor_next,
-        _scored=scored,
+        _cache=scored,
     )

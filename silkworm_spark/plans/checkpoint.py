@@ -105,16 +105,17 @@ def write_driver_table(path: str, rows: list[tuple], schema: StructType) -> None
 
 
 class PendingCommit:
-    """Write-behind half of a two-phase commit: sink-table writes and
-    the executor-side bloom merge keep running on driver threads while
-    the engine starts the next round's compute; ``finalize()`` joins
-    them, runs compaction, and atomically publishes the manifest."""
+    """Write-behind half of a two-phase commit: the packed append-table
+    write and the executor-side bloom merge keep running on driver
+    threads while the engine starts the next round's compute;
+    ``finalize()`` joins them, runs compaction, and atomically
+    publishes the manifest."""
 
-    def __init__(self, ckpt: "CrawlCheckpoint", pool, sink_futures,
+    def __init__(self, ckpt: "CrawlCheckpoint", pool, packed_future,
                  bloom_future, new_manifest: dict, rdir: str) -> None:
         self.ckpt = ckpt
         self.pool = pool
-        self.sink_futures = sink_futures
+        self.packed_future = packed_future
         self.bloom_future = bloom_future
         self.new_manifest = new_manifest
         self.rdir = rdir
@@ -126,11 +127,9 @@ class PendingCommit:
         self._done = True
         bloom_rel = None
         try:
-            for f in self.sink_futures:
-                res = f.result()  # one (name, rel) or a packed list of them
-                for name, rel in (res if isinstance(res, list) else [res]):
-                    if rel is not None:
-                        self.new_manifest["tables"].setdefault(name, []).append(rel)
+            if self.packed_future is not None:
+                for name, rel in self.packed_future.result():
+                    self.new_manifest["tables"].setdefault(name, []).append(rel)
             if self.bloom_future is not None:
                 bloom_rel = self.bloom_future.result()
         finally:
@@ -223,34 +222,33 @@ class CrawlCheckpoint:
         seq_next: int,
         appends: dict[str, DataFrame],
         snapshots: dict[str, DataFrame],
-        bloom: BloomTable | None = None,
-        bloom_update: DataFrame | None = None,
+        bloom: BloomTable,
+        bloom_update: DataFrame,
         known_counts: dict[str, int] | None = None,
         extras: dict[str, Any] | None = None,
         driver_appends: dict[str, list[tuple]] | None = None,
-        async_sinks: tuple = (),
         pointer_appends: dict[str, str] | None = None,
-    ) -> "PendingCommit | None":
-        """Write this round's data, then atomically publish the manifest.
+    ) -> PendingCommit:
+        """Write this round's data; the returned ``PendingCommit``
+        publishes the manifest atomically when finalized.
 
         A crash before the rename leaves the previous manifest intact →
         the next run resumes from the prior round exactly; orphan round
         directories are inert.
 
-        ``async_sinks`` names append tables whose writes may OVERLAP the
-        next round's compute: the commit returns a ``PendingCommit``
-        instead of publishing the manifest; the caller must
-        ``finalize()`` it before anything reads those tables THROUGH
-        THE CHECKPOINT or depends on the shared bloom bits (the engine
-        does so before the next round's dedup — so `seen` may be
-        deferred freely, and `frontier_delta`/`consumed` may be
-        deferred as long as the next DEQUEUE patches its frontier read
-        with the same data held as in-memory DataFrames; see
-        engine.run). Tables not named (the `host_state` snapshot) write
+        Every append table is written behind: one packed background job
+        whose writes may OVERLAP the next round's compute. The caller
+        must ``finalize()`` the result before anything reads those
+        tables THROUGH THE CHECKPOINT or depends on the shared bloom
+        bits (the engine does so before the next round's dedup — so
+        `seen` may be deferred freely, and `frontier_delta`/`consumed`
+        may be deferred as long as the next DEQUEUE patches its
+        frontier read with the same data held as in-memory DataFrames;
+        see engine.run). Snapshots (`host_state`, `robots`) write
         synchronously and land in the in-memory manifest immediately.
-        The on-disk manifest lags one round either way — a crash in the
-        window replays the whole round deterministically from the
-        previous manifest (same exact-resume contract, write-behind).
+        The on-disk manifest lags one round — a crash in the window
+        replays the whole round deterministically from the previous
+        manifest (same exact-resume contract, write-behind).
 
         ``known_counts`` lets the engine skip empty-table writes without
         the per-table ``isEmpty()`` job round 1 paid (6 driver jobs per
@@ -264,8 +262,7 @@ class CrawlCheckpoint:
         relative path to append to that table's manifest entry without
         any write job — the zero-copy commit for data a prior stage of
         the same round materialized in its final form (the engine's
-        spilled parse output IS the round's documents append; round 5
-        parquet-encoded the identical span table twice). Atomicity is
+        parse output IS the round's documents append). Atomicity is
         unchanged: the path only becomes reachable when the manifest
         publishes.
         """
@@ -278,23 +275,10 @@ class CrawlCheckpoint:
         new_manifest["seq_next"] = seq_next
         if extras:
             new_manifest.update(extras)
+        counts = known_counts or {}
 
-        # all table writes run as concurrent Spark jobs (separate driver
-        # threads); the manifest publishes only after every write lands,
-        # so atomicity is unchanged — commit wall time ≈ the largest
-        # single write instead of the sum
-        def write_append(name: str, df: DataFrame) -> tuple[str, str | None]:
-            n = (known_counts or {}).get(name)
-            if df is None or n == 0 or (n is None and df.isEmpty()):
-                return name, None
-            rel = os.path.join(rdir, name)
-            df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
-            return name, rel
-
-        def write_packed(
-            tables: dict[str, DataFrame], subdir: str = "packed"
-        ) -> list[tuple[str, str]]:
-            """All small append tables land in ONE write job partitioned
+        def write_packed(tables: dict[str, DataFrame]) -> list[tuple[str, str]]:
+            """All append tables land in ONE write job partitioned
             by a `table` column (row-group columns = union of schemas;
             readers prune back to each table's declared schema). One
             round-1 lesson: per-table jobs cost ~0.3-0.7 s of launch
@@ -314,15 +298,15 @@ class CrawlCheckpoint:
                 part = df.select(*sel).withColumn("table", F.lit(name))
                 packed = part if packed is None else packed.unionByName(part)
             packed.write.mode("overwrite").partitionBy("table").parquet(
-                os.path.join(self.root, rdir, subdir)
+                os.path.join(self.root, rdir, "packed")
             )
             return [
-                (name, os.path.join(rdir, subdir, f"table={name}"))
+                (name, os.path.join(rdir, "packed", f"table={name}"))
                 for name in tables
                 # a table with unknown count that turned out empty
                 # produces no partition dir — don't record it
                 if os.path.isdir(
-                    os.path.join(self.root, rdir, subdir, f"table={name}")
+                    os.path.join(self.root, rdir, "packed", f"table={name}")
                 )
             ]
 
@@ -331,20 +315,15 @@ class CrawlCheckpoint:
             df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
             return name, rel
 
-        counts = known_counts or {}
-        deferred = {
-            n: df for n, df in appends.items()
-            if n in async_sinks and df is not None and counts.get(n, 1) != 0
-        }
-        small = {
-            n: df for n, df in appends.items()
-            if n != "documents" and n not in deferred
-            and df is not None and counts.get(n, 1) != 0
-        }
-        big = {
-            n: df for n, df in appends.items()
-            if n not in small and n not in deferred
-        }
+        def write_bloom_delta() -> str:
+            # merge-on-read: only this round's delta bits land on disk
+            # (touched shards only) — O(new URLs), built and written
+            # entirely executor-side
+            rel = os.path.join(rdir, "bloom")
+            bloom.delta_for(bloom_update).write.mode("overwrite").parquet(
+                os.path.join(self.root, rel)
+            )
+            return rel
 
         # pointer appends: data already on disk in final form — just
         # record the path (reachable only once the manifest publishes)
@@ -360,43 +339,15 @@ class CrawlCheckpoint:
             )
             new_manifest["tables"].setdefault(name, []).append(rel)
 
-        n_tasks = len(big) + len(snapshots) + len(deferred) + 2
-        pool = cf.ThreadPoolExecutor(max_workers=n_tasks)
+        packed = {n: df for n, df in appends.items() if counts.get(n, 1) != 0}
+        pool = cf.ThreadPoolExecutor(max_workers=len(snapshots) + 2)
         try:
-            def write_bloom_delta() -> str:
-                # merge-on-read: only this round's delta bits land on
-                # disk (touched shards only) — O(new URLs), built and
-                # written entirely executor-side
-                rel = os.path.join(rdir, "bloom")
-                bloom.delta_for(bloom_update).write.mode("overwrite").parquet(
-                    os.path.join(self.root, rel)
-                )
-                return rel
-
             bfut = (
                 pool.submit(write_bloom_delta)
-                if bloom is not None and bloom_update is not None
-                and counts.get("seen", 1) != 0
-                else None
+                if counts.get("seen", 1) != 0 else None
             )
-            pfut = pool.submit(write_packed, small) if small else None
-            afuts = [pool.submit(write_append, n, df) for n, df in big.items()]
-            # deferred small tables pack into ONE background job too
-            # (same launch-latency amortization as the sync pack);
-            # deferred big tables (documents) write individually
-            d_small = {n: df for n, df in deferred.items() if n != "documents"}
-            d_big = {n: df for n, df in deferred.items() if n == "documents"}
-            dfuts = [pool.submit(write_append, n, df) for n, df in d_big.items()]
-            if d_small:
-                dfuts.append(pool.submit(write_packed, d_small, "packed_async"))
+            pfut = pool.submit(write_packed, packed) if packed else None
             sfuts = [pool.submit(write_snapshot, n, df) for n, df in snapshots.items()]
-            for f in afuts:
-                name, rel = f.result()
-                if rel is not None:
-                    new_manifest["tables"].setdefault(name, []).append(rel)
-            if pfut is not None:
-                for name, rel in pfut.result():
-                    new_manifest["tables"].setdefault(name, []).append(rel)
             for f in sfuts:
                 name, rel = f.result()
                 new_manifest["tables"][name] = [rel]
@@ -405,16 +356,12 @@ class CrawlCheckpoint:
             raise
 
         # the in-memory manifest advances NOW: the next round reads the
-        # sync tables through it; the FILE publishes in finalize()
+        # snapshots through it; the FILE publishes in finalize()
         self.manifest = new_manifest
-        pending = PendingCommit(
-            ckpt=self, pool=pool, sink_futures=dfuts, bloom_future=bfut,
+        return PendingCommit(
+            ckpt=self, pool=pool, packed_future=pfut, bloom_future=bfut,
             new_manifest=new_manifest, rdir=rdir,
         )
-        if not async_sinks:
-            pending.finalize()
-            return None
-        return pending
 
     def _compact_and_publish(self, new_manifest: dict, rdir: str,
                              bloom_rel: str | None) -> None:

@@ -18,39 +18,37 @@ becomes one *round* over the whole dequeued batch:
 reproduces the reference's concurrency=1 ordering exactly while
 executing wide.
 
-Driver-job discipline (the N→4N scaling fix, VERDICT r1): each round
-runs exactly FIVE sequential job launches —
+Round stages, in launch order. Each is one or a few Spark jobs; how
+many depends on the dequeue path, the redirect tail and the dedup
+strategy:
 
-    J1 dequeue agg        (general path: scored plan cached + every
-                           dequeue scalar; with no politeness rules
-                           loaded, ONE TakeOrdered — scheduler.py
-                           fast path)
-    J1b budget kth        (general path only, when selection exceeds
-                           the budget)
-    J2 parse counts       (the heavy Python stage: bodies STREAM
-                           through scan → broadcast join → Arrow —
-                           never cached; materializes the parse cache
-                           and yields item/error/json-item counts)
-    J3 fetch metrics agg  (body-FREE twin: re-join against the
-                           column-pruned resolved scan; one collect for
-                           per-partition lineage + every round total)
-    J4 dedup bucket count (anti-join + bloom probe + seq numbering
-                           offsets in one pass)
-    commit                (ALL appends WRITE-BEHIND — documents/items/
-                           fetch_log AND seen/frontier_delta/consumed
-                           plus the executor-side bloom merge — over-
-                           lapping the next round's J1-J2 and joining
-                           before its J4; the next dequeue patches its
-                           merge-on-read frontier with the in-memory
-                           new-rows/consumed DataFrames while their
-                           files land. Only the tiny host_state
-                           snapshot writes sync — checkpoint.
-                           PendingCommit)
+    dequeue       general path: the scored plan is cached and one agg
+                  yields every dequeue scalar, plus a budget-kth
+                  TakeOrdered when the selection exceeds the budget;
+                  with no politeness rules loaded, one TakeOrdered over
+                  the frontier and a cached batch (scheduler.py)
+    parse         the heavy Python stage: bodies STREAM through scan →
+                  broadcast join → Arrow and are never cached; the
+                  output is written once to round_NNNNN/parse, split by
+                  out_kind, with the item/error/json-item counts
+                  collected by an Observation on the same job
+    fetch metrics body-FREE twin (column-pruned resolved scan), run on a
+                  second driver thread alongside parse: one collect for
+                  per-partition lineage and every round total
+    dedup         anti-join (or bloom probe) and the seq numbering
+                  offsets in one pass
+    commit        every append table in ONE write-behind job, plus the
+                  executor-side bloom merge, overlapping the next
+                  round's dequeue, fetch and parse and joined before its
+                  dedup; the next dequeue patches its merge-on-read
+                  frontier with the in-memory new-rows/consumed
+                  DataFrames while their files land. Documents are a
+                  pointer to the round's parse output. Only the tiny
+                  host_state snapshot writes sync (checkpoint.
+                  PendingCommit)
 
 No ``.collect()`` of URL hashes, no per-table ``isEmpty()`` probes, no
-standalone ``count()`` jobs, no multi-hundred-MB body caches. Round 1
-ran ~20 driver jobs/round; the ~10-12 s of fixed per-round latency
-that cost was the reason measured N→4N efficiency stalled at 0.565.
+standalone ``count()`` jobs, no multi-hundred-MB body caches.
 """
 
 from __future__ import annotations
@@ -59,7 +57,7 @@ import os
 from dataclasses import dataclass, field
 from time import perf_counter
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from silkworm_spark.functions.urls import (
@@ -110,18 +108,10 @@ class CrawlConfig:
     max_retries: int = 3  # reference middlewares.py:102
     backoff_base: float = 0.5  # reference middlewares.py:104
     max_redirects: int = 10  # reference http.py:31
-    use_bloom: bool = True
-    # write-behind commits: sink tables (documents/items/fetch_log) and
-    # the bloom merge overlap the NEXT round's dequeue+fetch+parse; the
-    # manifest publishes at the join point before that round's dedup.
-    # Exact-resume is preserved (a crash in the window replays one
-    # deterministic round from the previous manifest).
-    async_commit: bool = True
     bloom_shards: int = 64  # scale: ~1 shard per seen-table partition
     bloom_bits_per_shard: int = 1 << 17
     bloom_k: int = 7
     num_partitions: int | None = None
-    target_rows_per_partition: int = 1000  # salt granularity per host
     min_rows_per_partition: int = 64  # floor before shrinking task width
     max_depth: int | None = None
     # global page cap (reference examples/sitemap_spider.py:189-201
@@ -129,33 +119,14 @@ class CrawlConfig:
     # cumulative dequeues — resume-exact via the manifest counter)
     max_pages: int | None = None
     html_max_bytes: int = 5_000_000  # parse cap (reference engine.py:37)
-    # batch size at which the round's parse output is materialized to
-    # compressed parquet in the checkpoint dir instead of the executor
-    # block-manager cache. The cache form of a multi-million-page round
-    # is ~10x the compressed size (uncompressed columnar + spans/links
-    # duplication) and every consumer (dedup's child explode, the
-    # document/item commit appends) streams ALL of it back — three
-    # full-cache scans per round of pure memory bandwidth, the one
-    # resource local[N] threads share. Parquet gives column-pruned,
-    # compressed re-reads (the child explode reads only the `children`
-    # column) and is the only form that exists at 10^10-URL scale,
-    # where a round's parse output cannot live in executor memory.
-    parse_spill_rows: int = 300_000
     horizon_factor: int = 4  # dequeue scans ~factor*budget seqs (see scheduler)
-    fetch_broadcast_max_rows: int = 2_000_000  # gate on the batch-side broadcast
     # seen-set size up to which dedup uses a map-side broadcast
-    # anti-join; beyond it, the sharded-bloom prefilter path.
-    # Env-overridable so deployments (and A/B measurements) can move
-    # the crossover without code edits: the broadcast build is a
-    # DRIVER-side collect+hash of the whole seen table per round — a
-    # fixed, width-independent cost that erodes N→4N scaling as the
-    # seen set grows, while the bloom probe is a keyed shuffle that
-    # scales with the cluster.
-    seen_broadcast_max_rows: int = field(
-        default_factory=lambda: int(
-            os.environ.get("SILKWORM_SEEN_BCAST_MAX", 4_000_000)
-        )
-    )
+    # anti-join; beyond it, the sharded-bloom prefilter path. The
+    # broadcast build is a DRIVER-side collect+hash of the whole seen
+    # table per round — a fixed, width-independent cost that erodes
+    # N→4N scaling as the seen set grows, while the bloom probe is a
+    # keyed shuffle that scales with the cluster.
+    seen_broadcast_max_rows: int = 4_000_000
     # request middlewares (reference middlewares.py:30-96,164-263):
     # UA rotation + proxy pool feed the live fetch; the per-request
     # delay paces enqueued children on the virtual clock
@@ -218,7 +189,6 @@ class CrawlEngine:
 
     # ---- seeding (reference open_spider, engine.py:79-86) ----
     def initialize(self, seeds: DataFrame, robots: DataFrame | None = None) -> None:
-        cfg = self.config
         if self.ckpt.exists():
             raise ValueError(
                 f"checkpoint already exists at {self.ckpt.root}; resume with "
@@ -292,12 +262,12 @@ class CrawlEngine:
                 "host_state": _empty_df(self.spark, HOST_STATE_SCHEMA),
                 "robots": robots,
             },
-            bloom=bloom if cfg.use_bloom else None,
-            bloom_update=seen if cfg.use_bloom else None,
+            bloom=bloom,
+            bloom_update=seen,
             known_counts={"seen": n, "frontier_delta": n},
             extras={"uniform_priority": uniform, "seq_floor": 0, "n_seen": n,
                     "n_fetched": 0},
-        )
+        ).finalize()
         frontier.unpersist()
 
     def _robots(self) -> DataFrame:
@@ -385,7 +355,7 @@ class CrawlEngine:
                 # in-memory DataFrames. The background parquet writes of
                 # the SAME data overlap this dequeue + fetch + parse and
                 # are joined before dedup (join_pending below).
-                p_new, p_consumed, _p_n_consumed = pending_frontier
+                p_new, p_consumed = pending_frontier
                 # measured note (r6): broadcasting p_consumed here was
                 # tried and REVERTED — the driver-side collect+hash of
                 # a round's seqs cost more at both widths than the
@@ -414,7 +384,6 @@ class CrawlEngine:
                 budget = min(budget, cfg.max_pages - n_fetched)
                 if budget <= 0:
                     break  # reached the global page cap
-            # J1 (+J1b when over budget)
             # horizon pruning is exact for ANY priority mix as long as
             # every finite host cap comes from the (broadcast) robots
             # table — rule-less hosts have cap ∞, where priority cannot
@@ -428,7 +397,6 @@ class CrawlEngine:
                 round_budget=budget,
                 per_host_cap=cfg.per_host_cap,
                 num_partitions=cfg.num_partitions,
-                target_rows_per_partition=cfg.target_rows_per_partition,
                 horizon=(seq_floor, seq_next, cfg.horizon_factor)
                 if (uniform_priority or _inf_cap) else None,
                 # provably-equivalent FIFO fast path: no robots rules
@@ -441,18 +409,6 @@ class CrawlEngine:
             )
             batch, denied = dq.batch, dq.denied
             n_batch, n_denied = dq.n_batch, dq.n_denied
-            batch_cached = None
-            if dq._scored is None and n_batch:
-                # FIFO fast path: dq.batch is a lazy filter over the
-                # (patched, merge-on-read) frontier — every downstream
-                # consumer (two fetch-join broadcasts, the missing
-                # anti-join, fetch_log, consumed, host_state) would
-                # re-scan the whole frontier. One body-free cache
-                # (~O(budget) narrow rows) collapses those to cache
-                # reads; r5's "commit" tick was ~47 s@4c of exactly
-                # these rescans. The general path already caches
-                # `scored`, so its batch is cheap by construction.
-                batch = batch_cached = batch.cache()
             tick("dequeue")
 
             if n_batch == 0 and n_denied == 0:
@@ -491,13 +447,10 @@ class CrawlEngine:
                 # 2.6M-key shuffle-hash join twice per round)
                 missing = offline_fetch_missing(batch, resolved).cache()
                 parse_src = offline_fetch_resolved(
-                    batch, resolved, n_batch=n_batch,
-                    broadcast_max_rows=cfg.fetch_broadcast_max_rows,
-                    missing=missing,
+                    batch, resolved, n_batch=n_batch, missing=missing,
                 )
                 meta_src = offline_fetch_resolved(
                     batch, resolved, n_batch=n_batch,
-                    broadcast_max_rows=cfg.fetch_broadcast_max_rows,
                     include_body=False, missing=missing,
                 )
             else:
@@ -577,33 +530,27 @@ class CrawlEngine:
             parse_in = parse_src.filter(parseable)
             if self.fetch_mode != "offline":
                 parse_in = parse_in.repartition(nparts, "part")
-            # small rounds: block-manager cache (no per-round file I/O);
-            # big rounds: spill to compressed parquet (see parse_spill_rows)
-            spill_parse = n_batch >= cfg.parse_spill_rows
+            # parse output is written once to compressed parquet, not
+            # cached: every consumer (dedup's child explode, the json
+            # item append) re-reads it column-pruned, and it is the
+            # only form that fits at 10^10-URL scale, where a round's
+            # parse output cannot live in executor memory. The spill lives
+            # INSIDE the round dir, partitioned by out_kind and
+            # carrying the round column: the item partition IS this
+            # round's documents append in final form, so the commit
+            # records a POINTER to it instead of parquet-encoding the
+            # identical span table a second time. Inert until the
+            # manifest publishes, like every round file.
             parse_out = run_parse_stage(parse_in)
-            parse_scratch = None
-            if spill_parse:
-                # the spill lives INSIDE the round dir, partitioned by
-                # out_kind and carrying the round column: the item
-                # partition IS this round's documents append in final
-                # form, so the commit records a POINTER to it instead
-                # of parquet-encoding the identical span table a second
-                # time (r5 wrote ~the whole parse output twice per
-                # round — once here, once as the documents sink; guide
-                # §1.2: don't compute things you throw away). Inert
-                # until the manifest publishes, like every round file.
-                parse_scratch = os.path.join(
-                    self.ckpt.root, f"round_{round_no:05d}", "parse"
-                )
-            else:
-                parse_out = parse_out.cache()
+            parse_rel = os.path.join(f"round_{round_no:05d}", "parse")
+            parse_dir = os.path.join(self.ckpt.root, parse_rel)
 
             # body-free metadata twin: the retry split and metrics never
             # touch page bodies (offline: column-pruned re-join; live:
             # projection off the fetch cache)
-            # cached: J3's agg materializes it, the retry split (J4's
-            # candidates chain) reuses it — without the cache the slim
-            # join would run twice per round
+            # cached: the metrics agg materializes it, the retry split
+            # (dedup's candidates chain) reuses it — without the cache
+            # the slim join would run twice per round
             fetched = meta_src.withColumn(
                 "_oversize",
                 F.coalesce(F.col("body_len") > cfg.html_max_bytes, F.lit(False)),
@@ -611,8 +558,8 @@ class CrawlEngine:
                 *[c for c in ("body", "content_type") if c in meta_src.columns]
             ).cache()
 
-            # J2 ∥ J3: the heavy python parse job and the slim metrics
-            # agg have no dependency — the metrics collect runs on a
+            # parse ∥ fetch metrics: the heavy python parse job and the
+            # slim metrics agg have no dependency — the metrics collect runs on a
             # second driver thread, filling executor slots the parse
             # stage's stragglers leave idle
             import concurrent.futures as _cf
@@ -636,48 +583,33 @@ class CrawlEngine:
 
             with _cf.ThreadPoolExecutor(1) as _ex:
                 part_fut = _ex.submit(_part_rows)
-                if spill_parse:
-                    # J2: ONE pass python parse → snappy parquet; the
-                    # item/error/json-item counts ride the same job as
-                    # observed metrics, so counting costs no extra scan
-                    from pyspark.sql import Observation
-
-                    _obs = Observation()
-                    (
-                        parse_out.withColumn("round", F.lit(round_no))
-                        .observe(
-                            _obs,
-                            F.sum((F.col("out_kind") == "item").cast("long"))
-                            .alias("n_item"),
-                            F.sum((F.col("out_kind") == "error").cast("long"))
-                            .alias("n_error"),
-                            F.sum(F.size("items")).alias("n_jitems"),
-                        )
-                        .write.mode("overwrite").partitionBy("out_kind")
-                        .parquet(parse_scratch)
+                # ONE pass python parse → snappy parquet; the item/
+                # error/json-item counts ride the same job as observed
+                # metrics, so counting costs no extra scan
+                _obs = Observation()
+                (
+                    parse_out.withColumn("round", F.lit(round_no))
+                    .observe(
+                        _obs,
+                        F.sum((F.col("out_kind") == "item").cast("long"))
+                        .alias("n_item"),
+                        F.sum((F.col("out_kind") == "error").cast("long"))
+                        .alias("n_error"),
+                        F.sum(F.size("items")).alias("n_jitems"),
                     )
-                    _m = _obs.get
-                    parse_counts = {
-                        "item": int(_m["n_item"] or 0),
-                        "error": int(_m["n_error"] or 0),
-                    }
-                    n_json_items = int(_m["n_jitems"] or 0)
-                    # downstream consumers re-read column-pruned: dedup's
-                    # child explode touches only `children`, the commit
-                    # appends touch spans/items — never the whole round
-                    parse_out = self.spark.read.schema(
-                        _PARSE_SPILL_SCHEMA
-                    ).parquet(parse_scratch)
-                else:
-                    # J2: materializes the parse cache (the python stage
-                    # pipelines with the fetch join) and yields the
-                    # span-item/error/json-item counts
-                    pc_rows = parse_out.groupBy("out_kind").agg(
-                        F.count("*").alias("cnt"),
-                        F.sum(F.size("items")).alias("jitems"),
-                    ).collect()
-                    parse_counts = {r["out_kind"]: r["cnt"] for r in pc_rows}
-                    n_json_items = int(sum(r["jitems"] or 0 for r in pc_rows))
+                    .write.mode("overwrite").partitionBy("out_kind")
+                    .parquet(parse_dir)
+                )
+                _m = _obs.get
+                n_parse_items = int(_m["n_item"] or 0)
+                n_parse_errors = int(_m["n_error"] or 0)
+                n_json_items = int(_m["n_jitems"] or 0)
+                # downstream consumers re-read column-pruned: dedup's
+                # child explode touches only `children`, the json item
+                # append touches `items` — never the whole round
+                parse_out = self.spark.read.schema(
+                    _PARSE_SPILL_SCHEMA
+                ).parquet(parse_dir)
                 tick("parse")
                 part_rows = part_fut.result()
             tick("fetch")
@@ -691,23 +623,6 @@ class CrawlEngine:
             # item/request routing is pure projection — parse carried the
             # parent metadata and canonical child URLs through the UDF;
             # the per-link explode happens here, JVM-side
-            doc_pointer = None
-            if spill_parse:
-                # zero-copy documents append: the spill's item
-                # partition already holds (doc_id, spans, status,
-                # depth, seq, round) — extra columns (url, children,
-                # callback, …) are never decoded by the column-pruned
-                # documents reader
-                documents = None
-                if parse_counts.get("item", 0):
-                    doc_pointer = os.path.join(
-                        f"round_{round_no:05d}", "parse", "out_kind=item"
-                    )
-            else:
-                documents = parse_out.filter(F.col("out_kind") == "item").select(
-                    "doc_id", "spans", "status", "depth", "seq",
-                    F.lit(round_no).alias("round"),
-                )
             # free-form JSON items → the pipelines' input stream
             # (reference engine.py:200-268 → pipelines.py connectors)
             json_items = (
@@ -778,11 +693,11 @@ class CrawlEngine:
 
             seen = self.ckpt.read("seen")
             deduped = dedup_candidates(
-                candidates, seen, bloom if cfg.use_bloom else None,
+                candidates, seen, bloom,
                 n_seen=n_seen, broadcast_max_rows=cfg.seen_broadcast_max_rows,
             )
             fresh = deduped.cache()
-            # J4: assign_dense_seq's bucket-count collect materializes
+            # assign_dense_seq's bucket-count collect materializes
             # `fresh` (anti-join + bloom probe) in the same pass; the
             # priority probe rides along to keep uniform_priority honest
             assigned, n_new, pr_new = assign_dense_seq(
@@ -814,8 +729,8 @@ class CrawlEngine:
             n_retries = sum(r["retries"] for r in part_rows)
             n_gave_up = sum(r["gave_up"] for r in part_rows)
             n_oversize = sum(r["dropped_oversize"] for r in part_rows)
-            n_items = parse_counts.get("item", 0) + n_json_items
-            n_err = sum(r["errors"] for r in part_rows) + parse_counts.get("error", 0)
+            n_items = n_parse_items + n_json_items
+            n_err = sum(r["errors"] for r in part_rows) + n_parse_errors
             elapsed_ms = (perf_counter() - rt0) * 1000.0
             metric_tuples = [
                 (round_no, int(r["partition_id"]), r["requests_sent"],
@@ -831,46 +746,32 @@ class CrawlEngine:
             )
 
             seq_floor = dq.floor_next
-            new_host_state = dq.new_host_state
-            if batch_cached is not None:
-                # FIFO fast path: dq's host_state recipe aggregates its
-                # own lazy batch plan (a full-frontier rescan at write
-                # time — most of r5's anti-scaling "commit" tick);
-                # rebuild the IDENTICAL aggregate over the cached batch
-                # (dequeue_fifo: taken counts per host, next_free
-                # floored at vtime, denied is empty on this path)
-                _taken = batch.groupBy("host").agg(F.count("*").alias("taken"))
-                _prev = host_state.select("host", "fetched", "next_free")
-                new_host_state = _prev.join(_taken, on="host", how="full").select(
-                    "host",
-                    (F.coalesce(F.col("fetched"), F.lit(0))
-                     + F.coalesce(F.col("taken"), F.lit(0))).alias("fetched"),
-                    F.coalesce(F.col("next_free"), F.lit(float(vtime))).alias("next_free"),
-                )
-            appends = {
-                "seen": seen_new,
-                "items": json_items,
-                "fetch_log": fetch_log,
-                "frontier_delta": new_rows,
-                "consumed": consumed,
-            }
-            if documents is not None:
-                appends["documents"] = documents
+            # zero-copy documents append: the spill's item partition
+            # already holds (doc_id, spans, status, depth, seq, round) —
+            # extra columns (url, children, callback, …) are never
+            # decoded by the column-pruned documents reader
+            doc_pointer = (
+                {"documents": os.path.join(parse_rel, "out_kind=item")}
+                if n_parse_items else None
+            )
             pending = self.ckpt.commit(
                 round_no=round_no,
                 vtime=vtime + cfg.round_seconds,
                 seq_next=seq_next,
-                appends=appends,
-                pointer_appends=(
-                    {"documents": doc_pointer} if doc_pointer else None
-                ),
+                appends={
+                    "seen": seen_new,
+                    "items": json_items,
+                    "fetch_log": fetch_log,
+                    "frontier_delta": new_rows,
+                    "consumed": consumed,
+                },
+                pointer_appends=doc_pointer,
                 driver_appends={"metrics": metric_tuples},
-                snapshots={"host_state": new_host_state},
-                bloom=bloom if cfg.use_bloom else None,
-                bloom_update=seen_new if cfg.use_bloom else None,
+                snapshots={"host_state": dq.new_host_state},
+                bloom=bloom,
+                bloom_update=seen_new,
                 known_counts={
                     "seen": n_new - n_retries,
-                    "documents": n_items - n_json_items,
                     "items": n_json_items,
                     "fetch_log": n_batch,
                     "frontier_delta": n_new,
@@ -882,40 +783,29 @@ class CrawlEngine:
                     "n_seen": (n_seen or 0) + (n_new - n_retries),
                     "n_fetched": n_fetched + n_batch,
                 },
-                # ALL appends are write-behind: documents/items/
-                # fetch_log gate nothing in the loop; `seen` gates only
-                # the next round's dedup, which sits behind the join
-                # point; frontier_delta/consumed gate the next DEQUEUE,
-                # which patches its read from the in-memory DataFrames
-                # (pending_frontier) while the files land in the
-                # background. The sync tail this removes was the one
-                # anti-scaling phase left (r4: 63 s@4c → 59 s@16c).
-                async_sinks=(
-                    ("documents", "items", "fetch_log",
-                     "seen", "frontier_delta", "consumed")
-                    if cfg.async_commit else ()
-                ),
             )
-            if pending is not None:
-                # lineage MUST be severed here (localCheckpoint →
-                # LogicalRDD): the patched frontier otherwise embeds
-                # this round's full plan tree — which itself embeds the
-                # previous patch — so plans grow geometrically across
-                # rounds (driver OOM at ~10 rounds just STRINGIFYING
-                # the tree). Lazy: no extra job now; the RDD blocks
-                # materialize with the next dequeue's first action,
-                # reading from the still-held fresh/scored caches.
-                pending_frontier = (
-                    new_rows.localCheckpoint(eager=False),
-                    consumed.localCheckpoint(eager=False),
-                    n_batch + n_denied,
-                )
-                # keep the last two patches' RDDs referenced (see
-                # pf_keep above) so the cleaner cannot drop their
-                # lineage-free blocks while a recompute can still
-                # reach them
-                pf_keep.append(pending_frontier)
-                del pf_keep[:-2]
+            # ALL appends are write-behind: items/fetch_log gate nothing
+            # in the loop; `seen` gates only the next round's dedup,
+            # which sits behind the join point; frontier_delta/consumed
+            # gate the next DEQUEUE, which patches its read from these
+            # in-memory DataFrames while the files land. Lineage MUST
+            # be severed here (localCheckpoint → LogicalRDD): the
+            # patched frontier otherwise embeds this round's full plan
+            # tree — which itself embeds the previous patch — so plans
+            # grow geometrically across rounds (driver OOM at ~10
+            # rounds just STRINGIFYING the tree). Lazy: no extra job
+            # now; the RDD blocks materialize with the next dequeue's
+            # first action, reading from the still-held fresh/scored
+            # caches.
+            pending_frontier = (
+                new_rows.localCheckpoint(eager=False),
+                consumed.localCheckpoint(eager=False),
+            )
+            # keep the last two patches' RDDs referenced (see pf_keep
+            # above) so the cleaner cannot drop their lineage-free
+            # blocks while a recompute can still reach them
+            pf_keep.append(pending_frontier)
+            del pf_keep[:-2]
             tick("commit")
             vtime += cfg.round_seconds
 
@@ -937,24 +827,17 @@ class CrawlEngine:
             if n_seen is not None:
                 n_seen += n_new - n_retries
 
-            releases = [
+            # the write-behind sinks still read these caches — hold
+            # them until the next join point. The parse spill is NOT
+            # deleted: its item partition is the documents append.
+            held = [
                 df.unpersist
-                for df in (raw_fetched, fetched, parse_out, fresh,
-                           batch_cached, missing)
+                for df in (raw_fetched, fetched, fresh, missing)
                 if df is not None
             ]
-            # the spill is NOT deleted: it lives in the round dir and
-            # its item partition is the documents append (doc_pointer)
             if getattr(deduped, "_dedup_cache", None) is not None:
-                releases.append(deduped._dedup_cache.unpersist)
-            releases.append(dq.release)
-            if pending is not None:
-                # the write-behind sinks still read these caches — hold
-                # them until the next join point
-                held = releases
-            else:
-                for r in releases:
-                    r()
+                held.append(deduped._dedup_cache.unpersist)
+            held.append(dq.release)
 
         tj = perf_counter()
         join_pending()

@@ -54,7 +54,8 @@ class SimResult:
 
 
 def _fetch(web: dict, url: str, retry_times: int, max_redirects: int):
-    """Mirror of operators/fetch.offline_fetch for one row."""
+    """Mirror of operators/fetch.resolve_web + offline_fetch_resolved
+    for one row."""
     cur, visited, redirects = url, {url}, 0
     for step in range(max_redirects + 1):
         page = web.get(cur)

@@ -13,6 +13,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap used when ``SPARK_DRIVER_MEMORY`` is unset: a quarter
+    of physical RAM (``MemTotal``), between 1g and 20g. In local mode
+    the driver JVM is also the executor, so it wants room, but a heap
+    larger than the machine gets the whole process OOM-killed. Without
+    a readable ``meminfo`` the 1g floor applies."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next(
+                int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        total_kb = 0
+    mb = max(1024, min(20 * 1024, total_kb // (4 * 1024)))
+    return f"{mb}m"
+
+
 def get_spark(
     app_name: str = "silkworm-spark",
     master: str | None = None,
@@ -58,7 +75,10 @@ def get_spark(
         # local mode: the driver JVM IS the executor — size the heap for
         # the per-round body cache (~rows x page size) or GC pauses
         # dominate wide (16+) task widths
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "20g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

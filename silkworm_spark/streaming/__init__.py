@@ -24,11 +24,13 @@ from silkworm_spark.plans.checkpoint import TABLE_SCHEMAS
 def documents_stream(spark: SparkSession, checkpoint_root: str) -> DataFrame:
     """readStream over the crawl's documents output: downstream
     pipelines (dedup, quality filtering, indexing) attach here and see
-    each round's documents as a micro-batch."""
+    each round's documents as a micro-batch. A round's documents are
+    the item partition of its parse output (the checkpoint commits
+    them as a pointer), read column-pruned to the documents schema."""
     return (
         spark.readStream.schema(TABLE_SCHEMAS["documents"])
         .option("pathGlobFilter", "*.parquet")
-        .parquet(f"{checkpoint_root}/round_*/documents")
+        .parquet(f"{checkpoint_root}/round_*/parse/out_kind=item")
     )
 
 

@@ -64,25 +64,19 @@ def _assert_invariants(engine, sim):
     assert got_docs == want_docs
 
 
-@pytest.mark.parametrize("use_bloom,force_bloom,force_spill", [
-    (True, False, False),   # default: small seen set takes the broadcast path
-    (False, False, False),  # plain anti-join
-    (True, True, False),    # seen_broadcast_max_rows=0: every round runs the
-                            # shard-local BloomTable probe + delta commits +
-                            # the merge-on-read part fold (the 10^10 path)
-    (True, False, True),    # parse_spill_rows=1: every round materializes
-                            # parse output to checkpoint parquet (the big-
-                            # round path) instead of the block-manager cache
+@pytest.mark.parametrize("force_bloom", [
+    pytest.param(False, id="default"),  # small seen set: broadcast path
+    # seen_broadcast_max_rows=0: every round runs the shard-local
+    # BloomTable probe + delta commits + the merge-on-read part fold
+    # (the 10^10 path)
+    pytest.param(True, id="bloom_path"),
 ])
-def test_e2e_no_politeness(spark, small_web, tmp_path, use_bloom, force_bloom,
-                           force_spill):
+def test_e2e_no_politeness(spark, small_web, tmp_path, force_bloom):
     """Pure reference semantics: unlimited budget, no robots — engine
     order must equal reference FIFO order (concurrency=1)."""
-    cfg = dict(max_rounds=30, use_bloom=use_bloom)
+    cfg = dict(max_rounds=30)
     if force_bloom:
         cfg["seen_broadcast_max_rows"] = 0
-    if force_spill:
-        cfg["parse_spill_rows"] = 1
     engine, sim = _run_both(spark, small_web, tmp_path, cfg, with_robots=False)
     assert sim.rounds > 2 and len(sim.fetch_order) > 100
     assert engine.stats.rounds == sim.rounds

@@ -261,8 +261,11 @@ def test_dequeue_fifo_fast_path_equals_general(spark):
         hs_s = {r["host"]: r["fetched"] for r in slow.new_host_state.collect()}
         hs_f = {r["host"]: r["fetched"] for r in fast.new_host_state.collect()}
         assert hs_s == hs_f
+        # the fast path owns its batch cache; release() frees it
+        assert fast.batch.is_cached
         slow.release()
         fast.release()
+        assert not fast.batch.is_cached
 
 
 def test_bloom_table_probe_equals_driver_filter(spark):

@@ -38,10 +38,9 @@ def test_resume_matches_uninterrupted(spark, small_web, tmp_path):
 
 
 def test_resume_with_parse_spill_pointer(spark, small_web, tmp_path):
-    """With the parse spill forced on every round (parse_spill_rows=1)
-    the documents table is committed as a POINTER into each round's
+    """The documents table is committed as a POINTER into each round's
     partitioned parse output — resume, replay, and the documents/seen/
-    frontier state must all be identical to the unspilled golden run."""
+    frontier state must all be identical to an uninterrupted run."""
     web = spark.createDataFrame(small_web["web"], WEB_SCHEMA)
     seeds = seeds_df(spark, small_web["seeds"])
     robots = robots_df(spark, small_web["robots"])
@@ -49,7 +48,7 @@ def test_resume_with_parse_spill_pointer(spark, small_web, tmp_path):
     golden = run_crawl(spark, web, seeds, robots, str(tmp_path / "gold"),
                        CrawlConfig(max_rounds=6, round_budget=40))
 
-    cfg = dict(round_budget=40, parse_spill_rows=1)
+    cfg = dict(round_budget=40)
     partial = run_crawl(spark, web, seeds, robots, str(tmp_path / "sp"),
                         CrawlConfig(max_rounds=3, **cfg))
     assert partial.stats.rounds == 3

@@ -142,7 +142,7 @@ def test_e2e_selector_spider_items_and_request_surface(spark, tmp_path):
     web = _mini_web(spark)
     eng = CrawlEngine(
         spark, str(tmp_path / "ckpt"),
-        CrawlConfig(max_rounds=5, round_budget=100, use_bloom=True),
+        CrawlConfig(max_rounds=5, round_budget=100),
         web=web,
     )
     seeds = spark.createDataFrame(

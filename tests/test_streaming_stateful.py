@@ -41,7 +41,7 @@ def ckpt_dir(spark, tmp_path):
         spark.createDataFrame(
             [tuple(r[f.name] for f in TABLE_SCHEMAS["documents"].fields) for r in rows],
             TABLE_SCHEMAS["documents"],
-        ).write.parquet(str(root / f"round_{rnd:05d}" / "documents"))
+        ).write.parquet(str(root / f"round_{rnd:05d}" / "parse" / "out_kind=item"))
     return str(root)
 
 
